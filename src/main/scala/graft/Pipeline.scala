@@ -74,25 +74,10 @@ import graft.process.JsonlProcess
   */
 object Pipeline {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors() - 1).toString)
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet must be readable from first load (see
-      // Tables.ensureNanosAsLong, which only covers foreign sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    GraftSession("graft-pipeline",
+      GraftSession.envCpus(math.max(2, Runtime.getRuntime.availableProcessors() - 1)),
+      sys.env.get("SPARK_MASTER"))
 
   // format sniffing by contents, not by path naming conventions — the
   // `process` stage emits json.gz into arbitrarily-named dirs. Goes through
@@ -343,7 +328,6 @@ object Pipeline {
       // progress); the printed count covers every watermark-sealed session.
       val spark = session()
       import spark.implicits._
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val schema = spark.read.parquet(s"$eventsDir/events.parquet").schema
       // the streaming file source wants a directory; select the events
       // table out of the sf dir by glob

@@ -83,46 +83,25 @@ object QueryDsl {
     * (SPARK-23207, on by default), so row-to-partition assignment is
     * reproducible under task retry; every judged aggregate downstream
     * is partitioning-independent (integer/decimal lattices — the oracle
-    * hash re-check after this change is the proof). Opt-out for A/B and
-    * embeddings that want the raw scan: `spark.graft.fanout=false` /
-    * `SPARK_GRAFT_FANOUT=0`.
-    */
-  def fanout(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val off = df.isStreaming ||
-      sys.env.get("SPARK_GRAFT_FANOUT").exists(v => v == "0" || v.equalsIgnoreCase("false")) ||
-      s.conf.getOption("spark.graft.fanout").exists(v => v == "0" || v.equalsIgnoreCase("false"))
-    if (off) df
-    else {
-      val target = s.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions * 2 > target) df else df.repartition(target)
-    }
-  }
-
-  /** Streaming twin of [[fanout]] (r22): fans a bounded file-stream's
-    * narrow map side out over the idle cores. A streaming scan of the
-    * one-file fixtures plans ONE task per micro-batch, so the per-record
-    * map work (token md5s for the count-min cells, signature hashing)
+    * hash re-check after this change is the proof).
+    *
+    * Streaming (r22): a bounded file-stream's scan of the one-file
+    * fixtures plans ONE task per micro-batch, so its per-record map work
     * serializes exactly like the batch case — but a streaming Dataset
     * cannot probe its own split count (`df.rdd` is illegal pre-start),
-    * so the guard probes `batchProbe`, a BATCH read of the same source
-    * path, whose file-split planning is identical. Same scale posture as
-    * [[fanout]]: at production split counts the guard fails and the plan
-    * is untouched; the repartition is stateless, so watermarks, state
-    * sharding and output semantics are unchanged (the oracle hash
-    * re-check is the proof). Shares the [[fanout]] kill switches.
+    * so a streaming caller passes `probe`, a BATCH read of the same
+    * source path, whose file-split planning is identical. The
+    * repartition is stateless, so watermarks, state sharding and output
+    * semantics are unchanged. A streaming `probe` leaves `df` as is.
     */
-  def fanoutStream(df: DataFrame, batchProbe: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val off = !df.isStreaming ||
-      sys.env.get("SPARK_GRAFT_FANOUT").exists(v => v == "0" || v.equalsIgnoreCase("false")) ||
-      s.conf.getOption("spark.graft.fanout").exists(v => v == "0" || v.equalsIgnoreCase("false"))
-    if (off) df
+  def fanout(df: DataFrame): DataFrame = fanout(df, df)
+
+  def fanout(df: DataFrame, probe: DataFrame): DataFrame =
+    if (probe.isStreaming) df
     else {
-      val target = s.sparkContext.defaultParallelism
-      if (batchProbe.rdd.getNumPartitions * 2 > target) df else df.repartition(target)
+      val target = df.sparkSession.sparkContext.defaultParallelism
+      if (probe.rdd.getNumPartitions * 2 > target) df else df.repartition(target)
     }
-  }
 
   /** THE repo-wide boolean-knob parse, one definition (round 12 — it had
     * grown copies): "1"/"true" (any case) enable; anything else,

@@ -971,7 +971,7 @@ object SketchQueries {
         try graft.streaming.GateStream.withStreamShuffle(s) {
           // the per-occurrence md5 map is the gate's dominant cost and a
           // one-split fixture serializes it — fan out (r22, guide §2.5/§2.6)
-          val cells = QueryDsl.fanoutStream(docs,
+          val cells = QueryDsl.fanout(docs,
               s.read.schema(schema).option("pathGlobFilter", "documents.parquet").parquet(d))
             .select(explode(split(col("text"), " ")).as("word"))
             .select(hash60(col("word")).as("h"), explode(rs).as("r"))

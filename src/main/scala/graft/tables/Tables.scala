@@ -160,13 +160,12 @@ object Tables {
     */
   /** `spark.sql.legacy.parquet.nanosAsLong` must be true BEFORE the
     * events parquet footer is read, or a TIMESTAMP(NANOS) file fails to
-    * load at all. The repo's own session builders (Bench / Verify /
-    * Pipeline / SparkSpec) set it at build time; this guard covers
-    * foreign sessions (library embedding) and — unlike the round-11
-    * shape, which re-set the conf unconditionally on every load — only
-    * ever writes when the value is absent or wrong, so an embedding
-    * that deliberately configured its session is never silently
-    * re-mutated on a hot path.
+    * load at all. The repo's own sessions (`GraftSession`) set it at
+    * build time; this guard covers foreign sessions (library embedding)
+    * and — unlike the round-11 shape, which re-set the conf
+    * unconditionally on every load — only ever writes when the value
+    * is absent or wrong, so an embedding that deliberately configured
+    * its session is never silently re-mutated on a hot path.
     */
   private def ensureNanosAsLong(s: SparkSession): Unit = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"

@@ -151,4 +151,42 @@ class TablesContractSpec extends SparkSpec {
     // clean tables carry no marker
     assert(!json.split("\"region\"")(1).split(",\"nation\"")(0).contains("drift"))
   }
+
+  test("GraftSession: the shared test session carries every fixed conf") {
+    // SparkSpec's session is GraftSession("graft-test", 2); a second
+    // factory call here would reconfigure that shared session
+    assert(spark.sparkContext.master === "local[2]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "2")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
+  }
+
+  test("GraftSession: SPARK_GRAFT_CPUS parses or fails naming the variable") {
+    assert(GraftSession.parseCpus(None, 7) === 7)
+    assert(GraftSession.parseCpus(Some(" "), 7) === 7)
+    assert(GraftSession.parseCpus(Some("3"), 7) === 3)
+    Seq("0", "-1", "lots").foreach { v =>
+      val e = intercept[IllegalArgumentException](GraftSession.parseCpus(Some(v), 7))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
+
+  test("GraftSession is the only session builder under src/main and src/test") {
+    import scala.jdk.CollectionConverters._
+    val builder = """SparkSession\s*\.\s*[Bb]uilder""".r
+    val hits = Seq("src/main", "src/test").flatMap { root =>
+      val dir = java.nio.file.Paths.get(root)
+      assert(Files.isDirectory(dir), s"$root not found from ${dir.toAbsolutePath}")
+      val walk = Files.walk(dir)
+      try walk.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftSession.scala")
+        .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
+        .map(_.toString).toList
+      finally walk.close()
+    }
+    assert(hits.isEmpty, s"build sessions through GraftSession, not by hand: ${hits.mkString(", ")}")
+  }
 }
