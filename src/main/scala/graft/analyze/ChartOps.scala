@@ -170,10 +170,6 @@ object ChartOps {
     val pts = points
       .select(col(selCol).cast("double").as("x"), col(weightCol).cast("double").as("w"))
       .filter(col("x").isNotNull && col("w").isNotNull)
-    // the reference bails out before padding when there are no points
-    // (analyze.py:633-634) — padding alone would divide by a zero total
-    if (pts.isEmpty)
-      return pts.select(lit("").as("label"), lit(0.0).as("pct")).limit(0)
     val binned = pts
       .withColumn("bin", abs(npRound(col("x") - lit(step / 2), 1)))
       .withColumn("label",
@@ -183,14 +179,19 @@ object ChartOps {
     val nPad = math.ceil(maxSelectivity / step - 1e-9).toInt
     val pad = spark.range(0, nPad)
       .select(format_string("%.2f", col("id").cast("double") * lit(step)).as("label"),
-        lit(0.0).as("w"))
+        lit(0.0).as("w"), lit(0L).as("n"))
     // percent per POINT then sum per label — the reference's aggregation
     // order (`wall = wall / wall.sum() * 100` at analyze.py:645, then
     // groupby-sum), kept bit-compatible; the total is a broadcast scalar
-    // aggregate, never a single-partition window over raw points
-    val all = binned.select(col("label"), col("w")).unionAll(pad)
-    val total = all.agg(sum(col("w")).as("total"))
-    all.crossJoin(broadcast(total))
+    // aggregate, never a single-partition window over raw points. `n`
+    // counts real points (pads carry 0): the reference bails out before
+    // padding when there are none (analyze.py:633-634), so the total row
+    // is dropped then and the cross join yields no rows, with no
+    // separate emptiness-probe job
+    val all = binned.select(col("label"), col("w"), lit(1L).as("n")).unionAll(pad)
+    val total = all.agg(sum(col("w")).as("total"), sum(col("n")).as("points"))
+      .filter(col("points") > 0).select(col("total"))
+    all.select(col("label"), col("w")).crossJoin(broadcast(total))
       .withColumn("pct", col("w") / col("total") * 100.0)
       .groupBy(col("label")).agg(sum(col("pct")).as("pct"))
       .orderBy(col("label"))

@@ -150,15 +150,29 @@ final class WorkloadViews private (val summaries: DataFrame) {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Scan-ish operators joined to their plan node's deepest table (A21-A23,
-    * B18/B22-24). Broadcast hint: the deduped node side of one workload is
-    * small relative to operator occurrences.
+  /** Every `*Scan*` operator occurrence left-joined to its plan node's
+    * deepest table, `table_name` = that table or "" (A21-A23, B18-B24).
+    * Cached: the six scan analyzers all read it, and deriving it runs the
+    * [[nodesDeduped]] window over every plan node plus a join. It holds a
+    * few thousand rows; [[nodesDeduped]] (one row per plan node) stays
+    * uncached.
     */
-  def scanOps(typeSubstring: String): DataFrame =
-    operators.filter(col("operator_type").contains(typeSubstring))
+  lazy val scans: DataFrame =
+    operators.filter(col("operator_type").contains("Scan"))
       .join(nodesDeduped.select(col("query_id"), col("node_id"), col("deepest_table")),
         Seq("query_id", "node_id"), "left")
       .withColumn("table_name", coalesce(col("deepest_table"), lit("")))
+      .cache()
+
+  /** The [[scans]] rows whose `operator_type` contains `typeSubstring`,
+    * which must itself contain "Scan" (any other substring would silently
+    * select nothing from the Scan-only view).
+    */
+  def scanOps(typeSubstring: String): DataFrame = {
+    require(typeSubstring.contains("Scan"),
+      s"scanOps($typeSubstring): the scans view holds only *Scan* operators")
+    scans.filter(col("operator_type").contains(typeSubstring))
+  }
 
   /** Classified join sites (A24, `analyze.py:1040-1080`): per join/semijoin
     * plan node, the probe/build operator pair.

@@ -251,8 +251,9 @@ object Report {
     val sections = Analyzers.all(views).toSeq.sortBy(_._1).map { case (name, f) =>
       val body =
         try {
-          // one Spark job per analyzer: collect 101 rows, derive emptiness
-          // and truncation from that instead of a separate count()
+          // one collect per analyzer (which may run several Spark jobs):
+          // take 101 rows, derive emptiness and truncation from them
+          // instead of a separate count()
           val df = f()
           val rows = df.limit(101).collect()
           if (rows.isEmpty) "<p class=\"empty\">not enough data</p>" // analyze.py:1250-1251

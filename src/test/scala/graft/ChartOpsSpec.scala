@@ -123,4 +123,17 @@ class ChartOpsSpec extends SparkSpec {
     assert(out("0.07") === 0.0)
     assert(out.size === 21) // 0.00..0.19 pads + 0.20 from data
   }
+
+  test("bins: no points (none at all, or all-null sel/w) yield 0 rows (analyze.py:633-634)") {
+    import spark.implicits._
+    val none = Seq.empty[(Double, Double)].toDF("sel", "w")
+    val nulls = Seq[(Option[Double], Option[Double])](
+      (None, Some(1.0)), (Some(0.5), None), (None, None)).toDF("sel", "w")
+    for ((pts, what) <- Seq(none -> "no rows", nulls -> "all-null rows");
+         (bins, max) <- Seq((10, 1.0), (100, 0.2))) {
+      val out = ChartOps.selectivityBins(pts, "sel", "w", bins, max)
+      assert(out.columns.toSeq === Seq("label", "pct"), what)
+      assert(out.collect().isEmpty, s"$what, bins=$bins")
+    }
+  }
 }

@@ -86,6 +86,23 @@ class ExtractSpec extends SparkSpec {
       ("5", "memory.memory:42")))
   }
 
+  test("scan analyzers read one cached scans view, no window per call") {
+    import org.apache.spark.sql.classic.ClassicConversions._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    graft.analyze.Analyzers.wallByTableScan(views).collect()
+    assert(spark.sharedState.cacheManager.lookupCachedData(views.scans).isDefined)
+    // the helper walks through AQE wrappers but not into the cached
+    // relation, so a window found here would run on every call
+    val plan = views.scanOps("ScanFilter").queryExecution.executedPlan
+    val walk = new AdaptiveSparkPlanHelper {}
+    assert(walk.find(plan)(_.isInstanceOf[InMemoryTableScanExec]).isDefined, plan)
+    assert(walk.find(plan)(_.isInstanceOf[WindowExec]).isEmpty, plan)
+    // a non-Scan substring would select nothing from the Scan-only view
+    intercept[IllegalArgumentException](views.scanOps("Filter"))
+  }
+
   test("poison records drop instead of killing the job") {
     import graft.ingest.QueryInfoParser
     val base = scala.io.Source.fromFile(resourcePath("queryinfo/q2.json")).mkString
